@@ -117,10 +117,12 @@ object KvBloom {
   * as the `.file_meta.tsv` index next to the data, the same role HBase
   * region metadata plays: rowkey bounds + bloom let the scan prune
   * files, and the snapshot manifest is assembled from these entries
-  * without touching data bytes again. */
+  * without touching data bytes again. `uniqueCells` says the writer saw
+  * the file's cells in strictly increasing (rowkey, qualifier) order, so
+  * the file holds every cell identity at most once. */
 case class KvFileMeta(file: String, bytes: Long, md5: String, cells: Long,
     minKey: Long, maxKey: Long, qualCells: Map[String, Long] = Map.empty,
-    bloomHex: Option[String] = None) {
+    bloomHex: Option[String] = None, uniqueCells: Boolean = false) {
   /** The per-qualifier breakdown is present and consistent — old-format
     * index lines (written before the 7th column existed) have no
     * breakdown, and a grouped-count pushdown must refuse them. */
@@ -164,12 +166,16 @@ object KvMeta {
       .filter(_.nonEmpty)
       .zipWithIndex.map { case (l, ln) =>
         try {
-          val a = l.split("\t", 8)
+          val a = l.split("\t", 9)
           KvFileMeta(a(0), a(1).toLong, a(2), a(3).toLong, a(4).toLong, a(5).toLong,
             if (a.length >= 7) decodeQuals(a(6)) else Map.empty,
             // col 8 (r7): rowkey bloom; absent/empty (old-format lines)
             // means "never skip" — pruning stays sound either way
-            if (a.length >= 8 && a(7).nonEmpty) Some(a(7)) else None)
+            if (a.length >= 8 && a(7).nonEmpty) Some(a(7)) else None,
+            // col 9: cells in strictly increasing (rowkey, qualifier)
+            // order; absent (8-column lines) or any other value reads as
+            // "not unique", which only disables diff pruning
+            a.length >= 9 && a(8) == "1")
         } catch {
           case e: RuntimeException => throw new java.io.IOException(
             s"graft-kv: corrupt stats index at $dir/$FILE:${ln + 1} — ${e.getMessage}", e)
@@ -187,7 +193,7 @@ object KvMeta {
     val merged = (read(dir) ++ entries.map(m => m.file -> m).toMap)
       .filter { case (f, _) => Files.exists(Paths.get(dir, f)) }
     val text = merged.values.toSeq.sortBy(_.file)
-      .map(m => s"${m.file}\t${m.bytes}\t${m.md5}\t${m.cells}\t${m.minKey}\t${m.maxKey}\t${encodeQuals(m.qualCells)}\t${m.bloomHex.getOrElse("")}")
+      .map(m => s"${m.file}\t${m.bytes}\t${m.md5}\t${m.cells}\t${m.minKey}\t${m.maxKey}\t${encodeQuals(m.qualCells)}\t${m.bloomHex.getOrElse("")}\t${if (m.uniqueCells) 1 else 0}")
       .mkString("", "\n", "\n")
     val tmp = Paths.get(dir, s"$FILE.tmp")
     Files.writeString(tmp, text, StandardCharsets.UTF_8)
@@ -209,40 +215,60 @@ object KvMeta {
   }
 }
 
-/** Conservative [lo, hi] rowkey interval implied by a pushed filter —
-  * the file-pruning mirror of HBase's region-range scan planning. ANDs
-  * intersect, ORs take the hull, anything not about rowkey is the full
-  * range. Never narrower than the true predicate, so pruning is always
-  * sound. */
+/** Conservative rowkey interval set implied by a pushed filter — the
+  * file-pruning mirror of HBase's region-range scan planning. A set is
+  * sorted, disjoint, non-empty [lo, hi] intervals. ANDs intersect, ORs
+  * unite (two far-apart ranges prune by each interval, not by their
+  * hull), anything not about rowkey is the full range. Never narrower
+  * than the true predicate, so pruning is always sound. */
 object KvKeyRange {
   type Range = (Long, Long)
-  val Full: Range = (Long.MinValue, Long.MaxValue)
-  val Empty: Range = (1L, 0L) // lo > hi
+  val Full: Seq[Range] = Seq((Long.MinValue, Long.MaxValue))
 
-  def intersect(a: Range, b: Range): Range = (math.max(a._1, b._1), math.min(a._2, b._2))
-  def hull(a: Range, b: Range): Range =
-    if (a._1 > a._2) b else if (b._1 > b._2) a
-    else (math.min(a._1, b._1), math.max(a._2, b._2))
+  private def one(lo: Long, hi: Long): Seq[Range] = if (lo > hi) Nil else Seq((lo, hi))
 
-  def of(f: Filter): Range = f match {
-    case EqualTo("rowkey", v: Number) => (v.longValue, v.longValue)
+  /** Sorted by lo, overlapping or touching intervals merged. */
+  def normalize(rs: Seq[Range]): Seq[Range] =
+    rs.sortBy(_._1).foldLeft(List.empty[Range]) {
+      // l > hi in the second test, so l - 1 cannot overflow
+      case ((lo, hi) :: done, (l, h)) if l <= hi || l - 1 == hi => (lo, math.max(hi, h)) :: done
+      case (done, r) => r :: done
+    }.reverse
+
+  def intersect(a: Seq[Range], b: Seq[Range]): Seq[Range] = normalize(
+    for ((al, ah) <- a; (bl, bh) <- b; r <- one(math.max(al, bl), math.min(ah, bh))) yield r)
+
+  def of(f: Filter): Seq[Range] = f match {
+    case EqualTo("rowkey", v: Number) => one(v.longValue, v.longValue)
     case GreaterThan("rowkey", v: Number) =>
-      if (v.longValue == Long.MaxValue) Empty else (v.longValue + 1, Long.MaxValue)
-    case GreaterThanOrEqual("rowkey", v: Number) => (v.longValue, Long.MaxValue)
+      if (v.longValue == Long.MaxValue) Nil else one(v.longValue + 1, Long.MaxValue)
+    case GreaterThanOrEqual("rowkey", v: Number) => one(v.longValue, Long.MaxValue)
     case LessThan("rowkey", v: Number) =>
-      if (v.longValue == Long.MinValue) Empty else (Long.MinValue, v.longValue - 1)
-    case LessThanOrEqual("rowkey", v: Number) => (Long.MinValue, v.longValue)
+      if (v.longValue == Long.MinValue) Nil else one(Long.MinValue, v.longValue - 1)
+    case LessThanOrEqual("rowkey", v: Number) => one(Long.MinValue, v.longValue)
+    // the hull: point sets prune through the bloom (pointKeys)
     case In("rowkey", vs) if vs != null && vs.nonEmpty && vs.forall(_.isInstanceOf[Number]) =>
       val ls = vs.map(_.asInstanceOf[Number].longValue)
-      (ls.min, ls.max)
+      one(ls.min, ls.max)
     case And(l, r) => intersect(of(l), of(r))
-    case Or(l, r) => hull(of(l), of(r))
+    case Or(l, r) => normalize(of(l) ++ of(r))
     case _ => Full
   }
 
   /** Top-level pushed filters are conjunctive. */
-  def ofAll(filters: Array[Filter]): Range =
+  def ofAll(filters: Array[Filter]): Seq[Range] =
     filters.map(of).foldLeft(Full)(intersect)
+
+  /** Whether [lo, hi] meets an interval of the set — a binary search for
+    * the first interval ending at or after lo (the ends ascend too). */
+  def overlaps(set: IndexedSeq[Range], lo: Long, hi: Long): Boolean = {
+    var (i, j) = (0, set.length)
+    while (i < j) {
+      val m = (i + j) >>> 1
+      if (set(m)._2 < lo) i = m + 1 else j = m
+    }
+    i < set.length && set(i)._1 <= hi
+  }
 
   /** The exact rowkey point set a filter restricts the scan to, when
     * one exists — the bloom-pruning precondition. Only shapes that
@@ -533,7 +559,7 @@ class KvScan(path: String, required: StructType, pushed: Array[Filter],
       s"PushedLimit: ${limit.getOrElse("none")}, ReadSchema: ${required.simpleString}"
 
   /** One partition per surviving data file. Files whose committed
-    * [minKey, maxKey] cannot overlap the pushed rowkey interval are
+    * [minKey, maxKey] cannot overlap any pushed rowkey interval are
     * skipped entirely — the HBase prune-by-region-range move — and for
     * POINT lookups (`rowkey = k` / `IN (...)`) a file additionally
     * survives only if its write-time bloom might contain one of the
@@ -543,13 +569,13 @@ class KvScan(path: String, required: StructType, pushed: Array[Filter],
     * are O(files) driver metadata. Files without index entries (or
     * without a bloom — old-format lines) are always read (sound). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val range = KvKeyRange.ofAll(pushed)
+    val ranges = KvKeyRange.ofAll(pushed).toIndexedSeq
     val points = KvKeyRange.pointKeysOfAll(pushed)
     val meta = KvMeta.read(path)
     KvFormat.dataFiles(path)
       .filter { f =>
         meta.get(f.getFileName.toString).forall { m =>
-          m.maxKey >= range._1 && m.minKey <= range._2 &&
+          KvKeyRange.overlaps(ranges, m.minKey, m.maxKey) &&
             points.forall(ks => m.bloomHex.forall(hex =>
               ks.exists(KvBloom.mightContain(hex, _))))
         }
@@ -642,9 +668,12 @@ class KvPartitionReader(file: String, required: StructType, pushed: Array[Filter
 // --------------------------------------------------------------- write
 
 class KvBatchWrite(path: String) extends BatchWrite {
+  // tags every file of this job, so an abort can also find files whose
+  // commit messages never reached the driver (see abort)
+  private val jobTag = java.util.UUID.randomUUID().toString.take(8)
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     Files.createDirectories(Paths.get(path))
-    new KvWriterFactory(path)
+    new KvWriterFactory(path, jobTag)
   }
   /** Job commit assembles the per-file stats index from the tasks'
     * commit messages — the driver never re-reads data bytes; its work is
@@ -652,17 +681,29 @@ class KvBatchWrite(path: String) extends BatchWrite {
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     KvMeta.append(path, messages.collect { case KvCommitMessage(Some(m)) => m }.toSeq)
   // job-level abort must undo task-level commits, or the renamed files of
-  // successful tasks would remain visible as partial output
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  // successful tasks would remain visible as partial output. Spark fails
+  // the job while sibling tasks may still be committing, so the messages
+  // can miss a file: the abort also deletes every file carrying the job's
+  // tag, after leaving a marker that makes a task committing later delete
+  // its own file (KvDataWriter.commit).
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    Files.writeString(KvDataWriter.abortMarker(path, jobTag), "")
     messages.foreach {
       case KvCommitMessage(Some(m)) => Files.deleteIfExists(Paths.get(path, m.file))
       case _ => ()
     }
+    val s = Files.list(Paths.get(path))
+    try s.iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(s"-$jobTag${KvFormat.SUFFIX}") || (n.startsWith(".tmp-") && n.endsWith(s"-$jobTag"))
+    }.foreach(Files.deleteIfExists)
+    finally s.close()
+  }
 }
 
-class KvWriterFactory(path: String) extends DataWriterFactory {
+class KvWriterFactory(path: String, jobTag: String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(path, partitionId, taskId)
+    new KvDataWriter(path, partitionId, taskId, jobTag)
 }
 
 /** None = the task received no rows and committed no file (empty shuffle
@@ -672,20 +713,22 @@ case class KvCommitMessage(meta: Option[KvFileMeta]) extends WriterCommitMessage
 /** Streams cells to a temp file, RENAMING into place on commit (two-phase
   * task commit). While writing it maintains the stats that become the
   * commit message: byte count + MD5 via a digesting stream (single pass,
-  * constant memory) and the rowkey min/max for scan pruning. Rowkey
+  * constant memory), the rowkey min/max for scan pruning, and whether the
+  * cells arrived in strictly increasing (rowkey, qualifier) order. Rowkey
   * CLUSTERING is the plan's job (`sortWithinPartitions`/
   * `repartitionByRange` before the write) — min/max stays sound either
   * way, a writer-side sort would just re-buffer what Spark's sort
   * operator already spills correctly. */
-class KvDataWriter(path: String, partitionId: Int, taskId: Long)
+class KvDataWriter(path: String, partitionId: Int, taskId: Long,
+    tag: String = KvDataWriter.procTag)
     extends DataWriter[InternalRow] {
   // (partitionId, taskId) is unique only WITHIN one Spark application —
   // a second application appending to the same store restarts task ids
-  // at 0 and would collide on the rename. The per-process tag makes
-  // cross-application appends safe (HBase solves this with UUID-named
-  // store files for the same reason).
-  private val tmp = Paths.get(path, s".tmp-$partitionId-$taskId-${KvDataWriter.procTag}")
-  private val dest = Paths.get(path, s"part-$partitionId-$taskId-${KvDataWriter.procTag}.kv")
+  // at 0 and would collide on the rename. The random tag (the job's, or
+  // else the process's) makes cross-application appends safe (HBase
+  // solves this with UUID-named store files for the same reason).
+  private val tmp = Paths.get(path, s".tmp-$partitionId-$taskId-$tag")
+  private val dest = Paths.get(path, s"part-$partitionId-$taskId-$tag.kv")
   private val digest = java.security.MessageDigest.getInstance("MD5")
   private var bytes = 0L
   private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
@@ -705,6 +748,10 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
   // rowkey bloom for point-lookup file skipping (HBase HFile bloom):
   // constant 32 bytes per file, built as cells stream through
   private val bloom = KvBloom.empty()
+  // strictly increasing (rowkey, qualifier) so far; qualifiers compare in
+  // UTF8String's byte order, the order a sortWithinPartitions leaves them in
+  private var unique = true
+  private var prevQual: String = _
 
   override def write(row: InternalRow): Unit = {
     // the format is one cell per line, tab-separated: reject rather than
@@ -716,6 +763,10 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
     require(!q.contains('\t') && !q.contains('\n') && !v.contains('\t') && !v.contains('\n'),
       "graft-kv qualifier/value must not contain tab or newline")
     val r = row.getLong(0)
+    if (unique) { // while it holds, the previous rowkey is maxKey
+      unique = cells == 0 || r > maxKey || (r == maxKey && KvDataWriter.utf8After(q, prevQual))
+      prevQual = q
+    }
     out.write(s"$r${KvFormat.SEP}$q${KvFormat.SEP}$v")
     out.newLine()
     cells += 1
@@ -729,10 +780,16 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
     if (cells == 0) { Files.deleteIfExists(tmp); KvCommitMessage(None) }
     else {
       Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-      val md5 = digest.digest().map("%02x".format(_)).mkString
-      KvCommitMessage(Some(KvFileMeta(
-        dest.getFileName.toString, bytes, md5, cells, minKey, maxKey, qualCounts.toMap,
-        Some(KvBloom.toHex(bloom)))))
+      if (Files.exists(KvDataWriter.abortMarker(path, tag))) {
+        // the job was aborted before this file appeared: take it back
+        Files.delete(dest)
+        KvCommitMessage(None)
+      } else {
+        val md5 = digest.digest().map("%02x".format(_)).mkString
+        KvCommitMessage(Some(KvFileMeta(
+          dest.getFileName.toString, bytes, md5, cells, minKey, maxKey, qualCounts.toMap,
+          Some(KvBloom.toHex(bloom)), unique)))
+      }
     }
   }
   override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
@@ -742,4 +799,21 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
 object KvDataWriter {
   /** Per-process disambiguator for data-file names (see constructor). */
   private val procTag: String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** Left by [[KvBatchWrite.abort]]; it stays, so that a task of the
+    * aborted job committing at any later time finds it. */
+  private[sources] def abortMarker(path: String, tag: String): Path =
+    Paths.get(path, s".aborted-$tag")
+
+  /** `a` sorts after `b` in UTF-8 byte order (UTF8String's), compared on
+    * the Java strings without encoding them: that is UTF-16 order except
+    * where a surrogate meets a char at or above U+E000, which UTF-8 puts
+    * below every supplementary code point. */
+  private[sources] def utf8After(a: String, b: String): Boolean = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    def rank(c: Char): Int = if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+    if (i == n) a.length > b.length else rank(a.charAt(i)) > rank(b.charAt(i))
+  }
 }

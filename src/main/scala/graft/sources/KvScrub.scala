@@ -40,21 +40,27 @@ object KvScrub {
     val onDisk = KvFormat.dataFiles(store).map(_.getFileName.toString).toSet
     val orphans = (onDisk -- indexed.keySet).toSeq.sorted
       .map(f => Finding(f, "orphan", "absent", "untracked"))
-    val checks = indexed.values.toSeq.sortBy(_.file).map(m => (m.file, m.md5))
-    val digested =
-      if (checks.isEmpty) Seq.empty[Finding]
-      else spark.sparkContext
-        .parallelize(checks, math.min(checks.size, 32))
-        .map { case (f, want) =>
-          val p = Paths.get(store, f)
-          if (!Files.exists(p)) Finding(f, "missing", want, "absent")
-          else {
-            val got = KvMeta.md5HexOf(p.toString)
-            Finding(f, if (got == want) "ok" else "checksum", want, got)
-          }
-        }
-        .collect().toSeq // bounded: one small Finding per store FILE
-        .filter(_.kind != "ok")
+    val want = indexed.values.map(m => m.file -> m.md5).toMap
+    val digested = mismatches(spark, store, want.toSeq.sorted).map {
+      case (f, None) => Finding(f, "missing", want(f), "absent")
+      case (f, Some(got)) => Finding(f, "checksum", want(f), got)
+    }
     (digested ++ orphans).sortBy(_.file)
   }
+
+  /** Re-digests the named files of `dir` on the executors — one map-only
+    * job, up to 32 tasks, no shuffle — and returns each (file, md5 on
+    * disk) that disagrees with its wanted md5, None where the file is
+    * gone. Only the mismatches come back to the driver. Shared by the
+    * scrub and [[KvSnapshots.verify]]. */
+  private[sources] def mismatches(spark: SparkSession, dir: String,
+      want: Seq[(String, String)]): Seq[(String, Option[String])] =
+    if (want.isEmpty) Seq.empty
+    else spark.sparkContext.parallelize(want, math.min(want.size, 32))
+      .flatMap { case (f, md5) =>
+        val p = Paths.get(dir, f)
+        val got = if (Files.exists(p)) Some(KvMeta.md5HexOf(p.toString)) else None
+        if (got.contains(md5)) None else Some((f, got))
+      }
+      .collect().toSeq
 }

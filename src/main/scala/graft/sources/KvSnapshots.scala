@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Named-snapshot lifecycle on the `graft-kv` cell store — the
   * reference utility's core object (SURVEY.md §2.A R1/R4/R5: create a
@@ -229,6 +229,11 @@ object KvSnapshots {
     * files. Existence + size are driver-side metadata calls; the
     * O(data) md5 re-read runs as a Spark job, one task per file. */
   def verify(spark: SparkSession, root: String, name: String): Unit = {
+    verifiedEntries(spark, root, name); ()
+  }
+
+  /** [[verify]], returning the verified manifest entries. */
+  private def verifiedEntries(spark: SparkSession, root: String, name: String): Seq[SnapEntry] = {
     val entries = parseManifest(root, name)
     val data = dataDir(root, name)
     entries.foreach { e =>
@@ -237,20 +242,13 @@ object KvSnapshots {
       require(Files.size(p) == e.bytes,
         s"snapshot $name: ${e.file} is ${Files.size(p)} bytes, manifest says ${e.bytes}")
     }
-    if (entries.nonEmpty) {
-      import spark.implicits._
-      val checks = entries.map(e => (data.resolve(e.file).toString, e.md5))
-      val mismatched = spark.createDataset(checks)
-        .repartition(math.min(checks.size, 32))
-        .map { case (path, want) => if (KvMeta.md5HexOf(path) == want) "" else path }
-        .filter(_.nonEmpty)
-        .collect() // only the names of corrupt files come back to the driver
-      require(mismatched.isEmpty,
-        s"snapshot $name: ${mismatched.mkString(", ")} fails its manifest checksum")
-    }
+    val mismatched = KvScrub.mismatches(spark, data.toString, entries.map(e => (e.file, e.md5)))
+    require(mismatched.isEmpty, s"snapshot $name: " +
+      s"${mismatched.map(m => data.resolve(m._1)).mkString(", ")} fails its manifest checksum")
     val extra = KvFormat.dataFiles(data.toString)
       .map(_.getFileName.toString).toSet -- entries.map(_.file).toSet
     require(extra.isEmpty, s"snapshot $name: unmanifested data files $extra")
+    entries
   }
 
   /** Verify the snapshot (see [[verify]]), then open it through the
@@ -267,14 +265,84 @@ object KvSnapshots {
     * full-outer shuffle join on that key classifying each divergent
     * cell as `added` (only in b), `removed` (only in a), or `changed`
     * (both, different value); unchanged cells are dropped in the same
-    * pass. At 100 TB both sides shuffle by the cell key once — and when
-    * both snapshots were written rowkey-range-partitioned (the
-    * compacted layout), a sort-merge join over co-located ranges does
-    * it without re-shuffling. Both snapshots are checksum-verified
-    * before the diff (a diff against rotted bytes is worse than none).
-    */
-  def diff(spark: SparkSession, root: String, a: String, b: String): DataFrame =
-    diffFrames((a, restore(spark, root, a)), (b, restore(spark, root, b)))
+    * pass. Both snapshots are checksum-verified before the diff (a diff
+    * against rotted bytes is worse than none).
+    *
+    * The diff reads only what the two snapshots do not share, when the
+    * stats index proves the shared files cannot matter. A manifest
+    * content (md5, bytes) found exactly once on each side is SHARED;
+    * both sides are then filtered to the rowkey ranges of the UNSHARED
+    * files (overlapping or touching ranges merged), and range pruning
+    * opens only the files that meet them. This needs every shared
+    * file's index entries to match the manifest's (md5, bytes) and to
+    * be flagged unique (written in strictly increasing cell order), the
+    * shared files' [minKey, maxKey] ranges to be pairwise disjoint, and
+    * every unshared file to have an index entry matching its manifest.
+    * Then every cell of a key inside the ranges is kept on both sides,
+    * so it is classified and duplicate-checked exactly as by the full
+    * diff; a key outside them lives in one shared file only, holds the
+    * same unique cells on both sides, and is unchanged. When a condition
+    * fails, or the unshared files are more than half of either side's
+    * bytes (pruning would save little), the full diff runs: same rows,
+    * same errors. The pruning trusts the committed stats index, as scan
+    * pruning and aggregate pushdown already do, and only where the
+    * index agrees with the checksum-verified manifest.
+    *
+    * At 100 TB both sides shuffle only the changed ranges by the cell
+    * key — and when both snapshots were written rowkey-range-partitioned
+    * (the compacted layout), a sort-merge join over co-located ranges
+    * does it without re-shuffling. */
+  def diff(spark: SparkSession, root: String, a: String, b: String): DataFrame = {
+    val keep = changedKeys(root, Seq(a, b).map(n => n -> verifiedEntries(spark, root, n)))
+    def side(n: String) = {
+      val df = spark.read.format("graft-kv").load(dataDir(root, n).toString)
+      n -> keep.fold(df)(df.filter(_))
+    }
+    diffFrames(side(a), side(b))
+  }
+
+  /** The filter on the rowkeys the unshared files of the two sides
+    * hold, when the stats index proves every other key unchanged and
+    * free of duplicates; None sends [[diff]] down the full path. */
+  private def changedKeys(root: String, sides: Seq[(String, Seq[SnapEntry])]): Option[Column] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    def content(e: SnapEntry) = (e.md5, e.bytes)
+    val counts = sides.map(_._2.groupMapReduce(content)(_ => 1)(_ + _))
+    val shared = counts.head.keySet.filter(k => counts.forall(_.get(k).contains(1)))
+    // per side: each file with its index entry, if that matches the
+    // manifest. A corrupt index prunes nothing; the scan reports it.
+    val files = sides.map { case (n, entries) =>
+      val meta = try KvMeta.read(dataDir(root, n).toString)
+        catch { case _: java.io.IOException => Map.empty[String, KvFileMeta] }
+      entries.map(e => (e, meta.get(e.file).filter(m => (m.md5, m.bytes) == content(e))))
+    }
+    val split = files.map(_.partition(f => shared(content(f._1))))
+    val worthIt = split.forall { case (sh, un) => un.map(_._1.bytes).sum <= sh.map(_._1.bytes).sum }
+    val (sharedFiles, unsharedFiles) = (split.flatMap(_._1), split.flatMap(_._2))
+    // one range per shared content, when both sides' entries flag it
+    // unique and agree on it
+    val sharedRanges = sharedFiles.groupMap(f => content(f._1))(_._2).values.toSeq.map { metas =>
+      metas.map(_.filter(_.uniqueCells).map(m => (m.minKey, m.maxKey))).distinct match {
+        case Seq(Some(r)) => Some(r)
+        case _ => None
+      }
+    }
+    val disjoint = sharedRanges.forall(_.isDefined) &&
+      sharedRanges.flatten.sortBy(_._1).sliding(2).forall {
+        case Seq((_, hi), (lo, _)) => hi < lo
+        case _ => true
+      }
+    if (!worthIt || !disjoint || !unsharedFiles.forall(_._2.isDefined)) None
+    else {
+      // a balanced OR tree keeps the pushed filter shallow for many ranges
+      def anyOf(cs: Seq[Column]): Column =
+        if (cs.isEmpty) lit(false)
+        else if (cs.size == 1) cs.head
+        else { val (l, r) = cs.splitAt(cs.size / 2); anyOf(l) || anyOf(r) }
+      Some(anyOf(KvKeyRange.normalize(unsharedFiles.map(f => (f._2.get.minKey, f._2.get.maxKey)))
+        .map { case (lo, hi) => col("rowkey").between(lo, hi) }))
+    }
+  }
 
   /** The diff over ALREADY-RESTORED (verified) frames — for callers
     * that also need a side's cells for their own work (changefeed

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.unsafe.types.UTF8String
@@ -63,10 +65,46 @@ class KvConnectorSpec extends AnyFunSuite {
     val f = Paths.get(dir, m.file)
     assert(Files.size(f) == m.bytes)
     assert(KvMeta.md5HexOf(f.toString) == m.md5)
-    assert(m.cells == 3 && m.minKey == 2L && m.maxKey == 9L)
+    assert(m.cells == 3 && m.minKey == 2L && m.maxKey == 9L && !m.uniqueCells)
+    val w2 = new KvDataWriter(dir, 1, 1L)
+    Seq(2L, 5L, 9L).foreach(r => w2.write(cell(r)))
+    val m2 = (w2.commit(): @unchecked) match { case KvCommitMessage(Some(x)) => x }
+    assert(m2.uniqueCells)
     // job commit persists the stats as the index — no data re-read needed
-    new KvBatchWrite(dir).commit(Array(KvCommitMessage(Some(m))))
-    assert(KvMeta.read(dir) == Map(m.file -> m))
+    new KvBatchWrite(dir).commit(Array(KvCommitMessage(Some(m)), KvCommitMessage(Some(m2))))
+    assert(KvMeta.read(dir) == Map(m.file -> m, m2.file -> m2))
+    // an 8-column line (written before column 9 existed) reads as not unique
+    val idx = Paths.get(dir, KvMeta.FILE)
+    Files.writeString(idx, Files.readAllLines(idx).asScala
+      .map(_.split("\t", 9).take(8).mkString("\t")).mkString("", "\n", "\n"))
+    assert(KvMeta.read(dir) == Map(m.file -> m, m2.file -> m2.copy(uniqueCells = false)))
+  }
+
+  test("writer flags a file unique only for strictly increasing (rowkey, qualifier) cells") {
+    val dir = Files.createTempDirectory("kvspec_unique").toString
+    def unique(cells: (Long, String)*): Boolean = {
+      val w = new KvDataWriter(dir, 0, 0L)
+      cells.foreach { case (r, q) =>
+        w.write(InternalRow(r, UTF8String.fromString(q), UTF8String.fromString("v")))
+      }
+      val m = (w.commit(): @unchecked) match { case KvCommitMessage(Some(x)) => x }
+      Files.delete(Paths.get(dir, m.file))
+      m.uniqueCells
+    }
+    assert(unique((1L, "a")))
+    assert(unique((1L, "a"), (1L, "b"), (2L, "a"), (Long.MaxValue, "a")))
+    assert(!unique((1L, "a"), (1L, "b"), (1L, "a")), "a repeated cell")
+    assert(!unique((1L, "b"), (1L, "a")), "qualifiers out of order")
+    assert(!unique((2L, "a"), (1L, "b")), "rowkeys out of order")
+    // qualifiers compare in UTF-8 byte order, as sortWithinPartitions
+    // leaves them: U+FFFF sorts below U+1F600 there, above it in UTF-16
+    val emoji = new String(Character.toChars(0x1F600))
+    assert(unique((1L, "\uFFFF"), (1L, emoji)))
+    assert(!unique((1L, emoji), (1L, "\uFFFF")))
+    val qs = Seq("", "a", "ab", "b", "\uD7FF", "\uE000", "\uFFFF", emoji, emoji + "a", "a" + emoji,
+      new String(Character.toChars(0x1F601)))
+    for (x <- qs; y <- qs) assert(KvDataWriter.utf8After(x, y) ==
+      (UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) > 0), s"'$x' vs '$y'")
   }
 
   test("an empty task commits no file (no 0-byte litter from empty partitions)") {
@@ -94,6 +132,11 @@ class KvConnectorSpec extends AnyFunSuite {
     // (which holds 11..20 only) proves neither key can be there → 2
     assert(planned(In("rowkey", Array[Any](3L, 25L))) == 2)
     assert(planned(GreaterThan("rowkey", 100L)) == 0)
+    // an OR of disjoint ranges prunes by each range, not by their hull
+    assert(planned(Or(LessThanOrEqual("rowkey", 5L), GreaterThanOrEqual("rowkey", 25L))) == 2)
+    assert(planned(Or(And(GreaterThanOrEqual("rowkey", 3L), LessThanOrEqual("rowkey", 4L)),
+      EqualTo("rowkey", 29L)), IsNotNull("rowkey")) == 2)
+    assert(planned(Or(LessThan("rowkey", 0L), GreaterThan("rowkey", 30L))) == 0)
     // a predicate on another column must not prune anything
     assert(planned(EqualTo("qualifier", "q")) == 3)
   }
@@ -302,6 +345,28 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(KvFormat.dataFiles(dir).size == 1)
     new KvBatchWrite(dir).abort(Array(msg))
     assert(KvFormat.dataFiles(dir).isEmpty)
+  }
+
+  test("job abort removes task files its messages miss; a task committing after it takes its file back") {
+    val dir = Files.createTempDirectory("kvspec_abort").toString
+    val batch = new KvBatchWrite(dir)
+    val factory = batch.createBatchWriterFactory(null)
+    def writer(p: Int) = {
+      val w = factory.createWriter(p, p.toLong)
+      w.write(InternalRow(p.toLong, UTF8String.fromString("q"), UTF8String.fromString("v")))
+      w
+    }
+    val (committed, running) = (writer(0), writer(1))
+    committed.commit() // its message never reaches the abort
+    batch.abort(Array.empty)
+    assert(KvFormat.dataFiles(dir).isEmpty)
+    intercept[java.io.IOException] { running.commit() } // the abort removed its temp file
+    // a task whose temp file the abort's listing missed, committing later
+    assert(writer(2).commit() == KvCommitMessage(None))
+    assert(KvFormat.dataFiles(dir).isEmpty)
+    val left = Files.list(Paths.get(dir))
+    try assert(left.iterator().asScala.forall(_.getFileName.toString.startsWith(".aborted-")))
+    finally left.close()
   }
 
   test("aborted task leaves no temp file behind") {

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Lifecycle invariants of the graft-kv named-snapshot manager that the
@@ -555,9 +556,99 @@ class KvSnapshotsSpec extends SparkSpec {
     }
     // raise_error surfaces wrapped in Spark's job failure — the message
     // must still name the offending snapshot
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("duplicate (rowkey, qualifier)")), e.toString)
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  /** Snapshot v1 and its incremental v2, 16 files of 10 rowkeys with
+    * cells (a, b) each, written in cell order. v2 rewrites block 2's b
+    * values and, in block 13, drops one cell and adds a c cell: two
+    * changed blocks far apart, 14 shared files. `dupBefore = Some(k)`
+    * writes a second (55, a) cell, in both snapshots, just before row
+    * k's cells: into block 5's own file for k = 55, into block 7's file
+    * for k = 70. Either way a shared file holds it. */
+  private def blockPair(root: String, dupBefore: Option[Long] = None): Unit = {
+    def snapshot(v2: Boolean) = {
+      val id = col("id")
+      def cell(rowkey: Column, q: String, value: Column) =
+        struct(rowkey.as("rowkey"), lit(q).as("qualifier"), value.as("value"))
+      spark.range(0, 160, 1, 16).select(explode(array(
+        cell(lit(55L), "a", when(lit(dupBefore.getOrElse(-1L)) === id, "dup")),
+        cell(id, "a", when(!(lit(v2) && id === 131), concat(lit("a"), id))),
+        cell(id, "b", when(lit(v2) && id.between(20, 29), "changed")
+          .otherwise(concat(lit("b"), id))),
+        cell(id, "c", when(lit(v2) && id === 135, "added")))).as("c"))
+        .select("c.*").filter(col("value").isNotNull)
+    }
+    KvSnapshots.create(snapshot(v2 = false), root, "v1")
+    KvSnapshots.createIncremental(snapshot(v2 = true), root, "v2", "v1")
+    assert(KvSnapshots.sharedFiles(root, "v2").size == 14)
+  }
+
+  private def diffRows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** diffFrames over the fully restored v1 and v2. */
+  private def fullDiff(root: String): Set[Seq[Any]] =
+    diffRows(KvSnapshots.diffFrames(("v1", KvSnapshots.restore(spark, root, "v1")),
+      ("v2", KvSnapshots.restore(spark, root, "v2"))))
+
+  /** (rows, lines read per side) of KvSnapshots.diff(v1, v2). */
+  private def observedDiff(root: String): (Set[Seq[Any]], Seq[Long]) = {
+    val dirs = Seq("v1", "v2").map(n => Paths.get(root, n, "data").toString)
+    dirs.foreach(KvReadStats.reset)
+    val rows = diffRows(KvSnapshots.diff(spark, root, "v1", "v2"))
+    (rows, dirs.map(KvReadStats.forDir(_).linesRead.get()))
+  }
+
+  private def cellsPerSide(root: String, sharedToo: Boolean): Seq[Long] = {
+    val shared = KvSnapshots.parseManifest(root, "v2").filter(_.sharedFrom.isDefined)
+      .map(e => (e.md5, e.bytes)).toSet
+    Seq("v1", "v2").map(n => KvSnapshots.parseManifest(root, n)
+      .filter(e => sharedToo || !shared((e.md5, e.bytes))).map(_.cells).sum)
+  }
+
+  test("diff of an incremental pair reads only the unshared files, same rows as the full diff") {
+    val root = freshRoot()
+    blockPair(root)
+    val full = fullDiff(root)
+    assert(full.size == 12 && full.count(_(2) == "changed") == 10 &&
+      full.contains(Seq(131L, "a", "removed", "a131", null)) &&
+      full.contains(Seq(135L, "c", "added", null, "added")))
+    val (rows, read) = observedDiff(root)
+    assert(rows == full)
+    // blocks 2 and 13 only: the 12 files between them are not opened
+    assert(read == cellsPerSide(root, sharedToo = false) && read == Seq(40L, 40L))
+  }
+
+  test("a duplicate cell inside a shared file, or across two shared files, still fails the diff") {
+    for (k <- Seq(55L, 70L)) {
+      val root = freshRoot()
+      blockPair(root, dupBefore = Some(k))
+      val e = intercept[Exception] { KvSnapshots.diff(spark, root, "v1", "v2").collect() }
+      assert(messages(e).exists(_.contains("duplicate (rowkey, qualifier)")), s"$k: $e")
+    }
+  }
+
+  test("diff falls back to the full path on an 8-column index or an index that disagrees with the manifest") {
+    val root = freshRoot()
+    blockPair(root)
+    val full = fullDiff(root)
+    val all = cellsPerSide(root, sharedToo = true)
+    val index = Paths.get(root, "v2", "data", KvMeta.FILE)
+    val written = Files.readString(index)
+    def rewrite(f: String => String): Unit =
+      Files.writeString(index, written.linesIterator.map(f).mkString("", "\n", "\n"))
+    rewrite(_.split("\t", 9).take(8).mkString("\t"))
+    assert(observedDiff(root) == ((full, all)))
+    val shared = KvSnapshots.sharedFiles(root, "v2").head
+    rewrite { l =>
+      val a = l.split("\t", -1)
+      if (a(0) == shared) (a.take(2) ++ Seq("0" * 32) ++ a.drop(3)).mkString("\t") else l
+    }
+    assert(observedDiff(root) == ((full, all)))
   }
 
   test("read paths reject names create() never validated (hand-placed dirs)") {
